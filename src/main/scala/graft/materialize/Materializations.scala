@@ -833,8 +833,6 @@ final class Materializer(wh: Warehouse) {
                           sourceId: String, batchId: Long,
                           opCol: String = "_op", ordCol: String = "_seq"): Boolean =
     wh.withRelationLock(rel) {
-      require(wh.usesManifest,
-        "exactly-once CDC ingestion requires manifest commit mode")
       if (wh.streamWatermark(rel, sourceId).exists(_ >= batchId)) false
       else {
         applyCdc(changes, rel, cfg, opCol, ordCol)

@@ -73,16 +73,7 @@ final case class SelectorDef(name: String, include: String,
   */
 final case class DependencyDef(name: String, warehouseRoot: String,
                                database: String = "analytics",
-                               schema: String = "main",
-                               // the UPSTREAM deployment's commit mode —
-                               // its own coordinate, NOT inherited from
-                               // the consumer: a manifest-deployed
-                               // upstream read through a rename-mode
-                               // lens would miss the manifest entirely.
-                               // Auto resolves by sys-prop/env/scheme,
-                               // the same rules the upstream itself used.
-                               commitMode: graft.core.CommitMode =
-                                 graft.core.CommitMode.Auto)
+                               schema: String = "main")
 
 /** A declared metric (the dbt metrics / semantic-layer shape: a named
   * aggregation over one model with a time dimension and allowed group-by
@@ -288,6 +279,9 @@ final case class Target(warehouseRoot: String,
                         // month|year). Relations without event_time pass
                         // through whole, exactly as in dbt.
                         sample: Option[String] = None,
+                        // ignored: the warehouse always commits through
+                        // manifests (Rename is refused by the Engine)
+                        @deprecated("the warehouse always commits through manifests", "0.2.0")
                         commitMode: graft.core.CommitMode = graft.core.CommitMode.Auto) {
   def resolvedSchema: String = {
     // generate_schema_name_for_env equivalent: allow env-templated schemas.
@@ -330,7 +324,33 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       onRunEnd = project0.onRunEnd
         .map(Compiler.expandMacros(_, project0.macros)))
 
-  val warehouse = new Warehouse(spark, target.warehouseRoot, target.commitMode)
+  refuseRenameMode()
+  @scala.annotation.nowarn("cat=deprecation")
+  private def refuseRenameMode(): Unit =
+    if (target.commitMode == graft.core.CommitMode.Rename)
+      Warehouse.checkCommitMode("Target.commitMode", Some("rename"))
+
+  val warehouse = new Warehouse(spark, target.warehouseRoot)
+
+  /** The one read resolver: a [[Warehouse]] per root this engine reads —
+    * its own target, the `--defer` state root, upstream (dbt mesh)
+    * project roots. Compiled SQL names every relation by path
+    * (`parquet.`<root>/db/schema/id``) and [[resolveSql]] lets each
+    * root's warehouse chase its committed manifest at execution time.
+    */
+  private val readRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, Warehouse]()
+  readRoots.put(target.warehouseRoot, warehouse)
+  private def warehouseAt(root: String): Warehouse =
+    readRoots.computeIfAbsent(root, r => new Warehouse(spark, r))
+
+  /** Resolve every warehouse relation path in `sqlText` through its
+    * root's warehouse (see [[readRoots]]).
+    */
+  def resolveSql(sqlText: String): String = {
+    import scala.jdk.CollectionConverters._
+    readRoots.values.asScala.foldLeft(sqlText)((q, w) => w.resolveSql(q))
+  }
   private val mat = new Materializer(warehouse)
   private val snap = new Snapshotter(warehouse)
 
@@ -379,17 +399,20 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
 
   /** Where a ref() resolves: normally this target; under --defer, models
     * NOT selected in this run read from the deferred (prod) root when the
-    * local relation doesn't exist (SURVEY §3.2 step 3).
+    * local relation doesn't exist (SURVEY §3.2 step 3). Either way the
+    * ref compiles to a path the owning root's warehouse resolves.
     */
+  private def refRoot(model: String, selected: Set[String],
+                      deferRoot: Option[String]): Warehouse = deferRoot match {
+    case Some(prod) if !selected.contains(model) &&
+        !warehouse.exists(relationFor(model)) => warehouseAt(prod)
+    case _ => warehouse
+  }
+
   private def refText(model: String, selected: Set[String],
                       deferRoot: Option[String]): String = {
-    val local = relationFor(model)
-    val path = deferRoot match {
-      case Some(prod) if !selected.contains(model) && !warehouse.exists(local) =>
-        local.pathUnder(prod)
-      case _ => local.pathUnder(target.warehouseRoot)
-    }
-    val base = Compiler.pathRelation(path)
+    val base = Compiler.pathRelation(
+      refRoot(model, selected, deferRoot).path(relationFor(model)))
     // a materialized_view whose definition decomposed (avg → sum+count
     // partials) stores the physical partial table; refs read the
     // DECLARED shape back through the projection subquery
@@ -397,23 +420,18 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
   }
 
   /** Cross-project ref resolution (dbt mesh): read the upstream
-    * deployment's relation. A manifest-mode upstream is registered as a
-    * temp view through its OWN warehouse (this engine's `resolveSql`
-    * only rewrites its own root); rename-mode upstreams read as direct
-    * parquet paths. Always read-only — a cross-project ref never adds a
-    * build edge here, exactly like dbt (the upstream runs on its own
-    * schedule).
+    * deployment's relation by path under its root, resolved at execution
+    * through that root's own warehouse ([[resolveSql]]). Always read-only
+    * — a cross-project ref never adds a build edge here, exactly like dbt
+    * (the upstream runs on its own schedule).
     */
-  private val depWarehouses =
-    new java.util.concurrent.ConcurrentHashMap[String, Warehouse]()
   private def crossRefText(proj: String, model: String): String = {
     val dep = project.dependencies.find(_.name == proj).getOrElse(
       throw new IllegalArgumentException(
         s"cross-project ref('$proj', '$model'): no dependency named " +
           s"'$proj' (registered: ${project.dependencies.map(_.name).mkString(", ")})"))
     val rel = Relation(dep.database, dep.schema, model)
-    val w = depWarehouses.computeIfAbsent(dep.warehouseRoot,
-      r => new Warehouse(spark, r, dep.commitMode))
+    val w = warehouseAt(dep.warehouseRoot)
     // a view-deployed upstream has no table dir — resolve its durable
     // compiled definition through the UPSTREAM's own warehouse (pointer
     // chasing included), same mechanism readModel uses locally
@@ -422,11 +440,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
         val vn = safeViewName("graft_dep", proj, model)
         df.createOrReplaceTempView(vn)
         "`" + vn + "`"
-      case None if w.usesManifest && w.exists(rel) =>
-        val vn = safeViewName("graft_dep", proj, model)
-        w.read(rel).createOrReplaceTempView(vn)
-        "`" + vn + "`"
-      case None => Compiler.pathRelation(rel.pathUnder(dep.warehouseRoot))
+      case None => Compiler.pathRelation(w.path(rel))
     }
   }
 
@@ -447,7 +461,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
         case None => mvProjCache.put(name, None); None
         case Some(mm) =>
           scala.util.Try {
-            val df = spark.sql(warehouse.resolveSql(
+            val df = spark.sql(resolveSql(
               compileSql(mm, Set.empty, None, fullRefresh = false)))
             graft.plans.AggViewRewrite.extractSpec(df)
               .flatMap { case (_, _, outs) =>
@@ -675,7 +689,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       if (!executeMode)
         return Compiler.QueryResult(IndexedSeq.empty, IndexedSeq.empty)
       val cap = 500
-      val df = spark.sql(warehouse.resolveSql(q))
+      val df = spark.sql(resolveSql(q))
       val rows = df.limit(cap + 1).collect()
       require(rows.length <= cap,
         s"run_query returned more than $cap rows — introspective compile " +
@@ -729,27 +743,14 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
               if (warehouse.exists(r)) Some(Compiler.pathRelation(
                 r.pathUnder(target.warehouseRoot))) else None
             case "ref" =>
+              // --defer parity: the existence guard asks the same
+              // warehouse ref() itself resolves through, so the canonical
+              // `load_relation(ref(x)) is not none` guard never disagrees
+              // with where the ref reads
               val r = relationFor(a)
-              if (warehouse.exists(r)) Some(Compiler.pathRelation(
-                r.pathUnder(target.warehouseRoot)))
-              else deferRoot match {
-                // --defer parity: the existence guard must agree with
-                // where ref() itself resolves, or the canonical
-                // `load_relation(ref(x)) is not none` guard takes the
-                // missing-branch while the ref would read prod data
-                // existence probed through Hadoop FS, not java.io.File:
-                // the defer root may be an object store (s3/gs/abfs —
-                // schemes the Warehouse supports), where a local-File
-                // probe is always false and the guard would take the
-                // missing branch while ref() resolves to prod
-                case Some(prod) if !selected.contains(a) && {
-                  val p = new org.apache.hadoop.fs.Path(r.pathUnder(prod))
-                  p.getFileSystem(spark.sessionState.newHadoopConf())
-                    .exists(p)
-                } =>
-                  Some(Compiler.pathRelation(r.pathUnder(prod)))
-                case _ => None
-              }
+              val w = refRoot(a, selected, deferRoot)
+              if (w.exists(r)) Some(Compiler.pathRelation(w.path(r)))
+              else None
             case "source" =>
               val sd = project.sources.find(x =>
                 x.sourceName == a && x.tableName == b.getOrElse(""))
@@ -768,7 +769,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       val (sqlRq, colTables) = Compiler.resolveGetColumns(sqlRq0,
         (kind, a, b) =>
           if (!executeMode) Nil
-          else spark.sql(warehouse.resolveSql(
+          else spark.sql(resolveSql(
             s"SELECT * FROM ${introRelText(kind, a, b,
               "get_columns_in_relation")} LIMIT 0")).schema.fields
             .map(f => f.name -> f.dataType.sql.toLowerCase).toSeq)
@@ -781,7 +782,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
         // dbt-utils' own `if not execute` arm — without touching the
         // warehouse.
         if (!executeMode) IndexedSeq.empty
-        else spark.sql(warehouse.resolveSql(
+        else spark.sql(resolveSql(
           s"SELECT `$column` AS v " +
             s"FROM ${introRelText(kind, a, b, "get_column_values")} " +
             s"WHERE `$column` IS NOT NULL GROUP BY `$column` " +
@@ -790,7 +791,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       // star()/union_relations(): schema only — resolveSql + limit 0
       // keeps both metadata-only
       def schemaOf(kind: String, a: String, b: Option[String], what: String) =
-        spark.sql(warehouse.resolveSql(
+        spark.sql(resolveSql(
           s"SELECT * FROM ${introRelText(kind, a, b, what)} LIMIT 0")).schema
       val sql2 = Compiler.resolveStar(sql, (kind, a, b) =>
         // parse phase: dbt-utils star returns the literal '*'
@@ -859,7 +860,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
             val text = Compiler.pathRelation(
               r.pathUnder(target.warehouseRoot))
             (r.fqName, text,
-              spark.sql(warehouse.resolveSql(
+              spark.sql(resolveSql(
                 s"SELECT * FROM $text LIMIT 0")).schema.fields
                 .map(f => f.name -> f.dataType.sql).toIndexedSeq)
           }
@@ -914,7 +915,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
   private def runHooks(hooks: Seq[String], modelName: String): Unit =
     hooks.foreach { h0 =>
       val h = Compiler.expandMacros(h0, project.macros)
-      spark.sql(warehouse.resolveSql(Compiler.compile(h, Compiler.ResolveCtx(
+      spark.sql(resolveSql(Compiler.compile(h, Compiler.ResolveCtx(
         refTarget = r => Compiler.pathRelation(
           relationFor(r).pathUnder(target.warehouseRoot)),
         sourceTarget = (s, t) => sourceText(s, t),
@@ -942,7 +943,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     */
   private def runProjectHooks(hooks: Seq[String]): Unit =
     hooks.foreach { h =>
-      spark.sql(warehouse.resolveSql(Compiler.compile(h, Compiler.ResolveCtx(
+      spark.sql(resolveSql(Compiler.compile(h, Compiler.ResolveCtx(
         refTarget = r => Compiler.pathRelation(
           relationFor(r).pathUnder(target.warehouseRoot)),
         sourceTarget = (s, t) => sourceText(s, t),
@@ -1032,7 +1033,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       // everything already executed still unwinds (re-undoing a failed
       // statement is harmless — DROP IF EXISTS / restore-the-same-value)
       undo += inverse.get
-      spark.sql(warehouse.resolveSql(st))
+      spark.sql(resolveSql(st))
       ()
     } catch { case e: Throwable => unwind(); throw e }
     () => unwind()
@@ -1175,13 +1176,13 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
             s"(got '${cfg.materialized}')")
         mat.datePartitionedTable(spark, compiled, relationFor(m.name), cfg,
           DateUtils.expandPartitionDates(cfg.partitions),
-          warehouse.resolveSql)
+          resolveSql)
         warehouse.dropView(relationFor(m.name))
       } else {
       // model contract (dbt 1.5): schema validated at analysis time,
       // not_null raise-on-null wrapped into the write pass itself
       val df = graft.materialize.Contracts.enforce(
-        spark.sql(warehouse.resolveSql(compiled)),
+        spark.sql(resolveSql(compiled)),
         cfg.contract, cfg.notNull, m.name)
       // require_partition_filter guards (plan-time, no job): reads of a
       // guarded upstream must be partition-pruned. Self-reads exempt
@@ -1212,9 +1213,6 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
           // Here: extract the (keys, aggs) spec back out of the model's
           // analyzed plan, fold deltas via maintainAggView (self-healing
           // on non-append sources), and register the serving rewrite.
-          require(warehouse.usesManifest,
-            s"${m.name}: materialized_view needs the manifest commit mode " +
-              "(incremental maintenance checkpoints ride manifest metadata)")
           if (fullRefresh) warehouse.drop(relationFor(m.name))
           val (refs, _) = Compiler.dependencies(m.rawSql)
           // the source must be WAREHOUSE-TABLE-backed: maintenance reads
@@ -1265,7 +1263,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       runHooks(cfg.postHooks, m.name)
     }
     project.snapshots.find(_.name == name).foreach { sn =>
-      val df = spark.sql(warehouse.resolveSql(compileSql(
+      val df = spark.sql(resolveSql(compileSql(
         ModelDef(sn.name, sn.rawSql), selected, deferRoot, fullRefresh)))
       if (!fullRefresh)
         graft.plans.PartitionFilterGuard.assertPruned(
@@ -1306,10 +1304,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     // {{ make_temp_relation(this) }} (reference @194314): a
     // __graft_tmp-suffixed sibling relation — the build-into-temp-then-
     // rename idiom; resolves HERE because only the engine knows the
-    // path. The suffix is deliberately DISJOINT from writeAtomic's
-    // internal __dbt_tmp/__dbt_backup scratch names: a create-as-select
-    // whose SOURCE is the user temp must not have its input deleted by
-    // the writer's own scratch cleanup.
+    // path.
     val prepped = """\{\{\s*make_temp_relation\(\s*this\s*\)\s*\}\}""".r
       .replaceAllIn(prepped0, scala.util.matching.Regex.quoteReplacement(
         Compiler.pathRelation(relationFor(m.name).suffixed("__graft_tmp")
@@ -1382,7 +1377,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
           s"$text is not a relation of this warehouse — statements may " +
           "only write {{ this }} or warehouse relations"))
     def frame(select: String): DataFrame =
-      spark.sql(warehouse.resolveSql(select))
+      spark.sql(resolveSql(select))
     sql match {
       case matCreateRe(orReplace, ifNotExists, relText, select) =>
         val rel = relOf(relText)
@@ -1449,9 +1444,8 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
       case other =>
         // a WRITE shape the router did not recognize must never execute
         // verbatim: Spark would write directly into the live relation
-        // directory, bypassing the warehouse's atomic machinery (and in
-        // manifest mode fail cryptically against a read-only view) —
-        // refuse loudly naming the supported shapes. Session-scoped
+        // directory, bypassing the warehouse's atomic machinery (or
+        // fail cryptically against a read-only view) — refuse loudly naming the supported shapes. Session-scoped
         // metadata DDL writes NO storage and stays legal: temp views
         // (the standard dbt-spark materialization idiom) and their drops.
         val isSessionDdl = other.matches(
@@ -1467,7 +1461,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
             other.linesIterator.take(2).mkString(" ").take(160))
         // side-effect-free statements (SELECT probes etc.): take(1),
         // never collect — the result is discarded
-        try { spark.sql(warehouse.resolveSql(other)).take(1); () }
+        try { spark.sql(resolveSql(other)).take(1); () }
         catch { case e: Exception => throw new IllegalArgumentException(
           s"materialization '$matName' statement('$stmtName') failed " +
             s"(model '$modelName'): ${e.getMessage}", e)
@@ -1712,15 +1706,9 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     * `cloned`, `cloned_view`, or `missing` (no prod relation — dbt
     * skips those too).
     */
-  def cloneFromState(selector: String, fromRoot: String,
-                     fromCommitMode: Option[graft.core.CommitMode] = None)
+  def cloneFromState(selector: String, fromRoot: String)
       : Seq[(String, String)] = {
-    // the state root is a sibling deployment of this project — default
-    // to this target's commit-mode resolution, overridable when the
-    // prod deployment's mode differs (zero-copy needs both sides on the
-    // manifest protocol; mixed modes degrade to a deep copy)
-    val srcWh = new graft.core.Warehouse(spark, fromRoot,
-      fromCommitMode.getOrElse(target.commitMode))
+    val srcWh = warehouseAt(fromRoot)
     val buildable = (project.models.map(_.name) ++ project.seeds.map(_.name) ++
       project.snapshots.map(_.name)).toSet
     selectNodes(selector).intersect(buildable).toSeq.sorted.map { n =>
@@ -1817,7 +1805,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
   }
 
   def renderInline(sqlTemplate: String): DataFrame =
-    spark.sql(warehouse.resolveSql(compileInline(sqlTemplate)))
+    spark.sql(resolveSql(compileInline(sqlTemplate)))
 
   /** dbt `analysis` nodes (the reference reserves the dir —
     * `analysis/.gitkeep`, `analysis-paths` in dbt_project.yml:15-20):
@@ -1984,12 +1972,12 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
         // registered temp view if this session built it, else compile on
         // the fly (views/ephemerals are logical — always reconstructible)
         if (spark.catalog.tableExists(viewName(name))) spark.table(viewName(name))
-        else spark.sql(warehouse.resolveSql(
+        else spark.sql(resolveSql(
           compileSql(m, Set.empty, None, fullRefresh = false)))
       case None =>
         val rel = relationFor(name)
         if (warehouse.exists(rel)) mvProjection(name) match {
-          case Some(p) => spark.sql(warehouse.resolveSql(s"SELECT $p FROM " +
+          case Some(p) => spark.sql(resolveSql(s"SELECT $p FROM " +
             Compiler.pathRelation(rel.pathUnder(target.warehouseRoot))))
           case None => warehouse.read(rel)
         }
@@ -2163,7 +2151,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
         s"(known: ${project.macros.keys.toSeq.sorted.mkString(", ")})")
     val call = s"{{ $name(${args.map { case (k, v) => s"$k=$v" }.mkString(", ")}) }}"
     val sql = Compiler.expandMacros(call, project.macros)
-    spark.sql(warehouse.resolveSql(Compiler.compile(sql, Compiler.ResolveCtx(
+    spark.sql(resolveSql(Compiler.compile(sql, Compiler.ResolveCtx(
       refTarget = r => Compiler.pathRelation(
         relationFor(r).pathUnder(target.warehouseRoot)),
       sourceTarget = (s, t) => sourceText(s, t),
@@ -2221,8 +2209,7 @@ final class Engine(spark: SparkSession, project0: Project, target: Target) {
     * VIEW` statements (ANSI-ish Spark SQL) over the CURRENT committed
     * state, so any Spark session (or an engine with parquet path
     * tables) registers the warehouse without knowing graft's layout.
-    * Rename-mode tables are single live dirs; manifest-mode tables
-    * expand to their committed (version, partition) slices with
+    * Tables expand to their committed (version, partition) slices with
     * partition values re-attached as literals CAST to the reader
     * schema's types — replaced partitions and multi-version appends
     * read exactly like graft's own reader. Durable view models re-emit

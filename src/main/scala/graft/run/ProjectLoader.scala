@@ -34,6 +34,8 @@ object ProjectLoader {
         !Files.exists(root.resolve("project.conf")))
       return DbtProjectLoader.load(dir)
     val conf = parseConf(root.resolve("project.conf"))
+    graft.core.Warehouse.checkCommitMode("project.conf commit_mode",
+      conf.get("commit_mode"))
     val name = conf.getOrElse("name", root.getFileName.toString)
 
     val sources = readLines(root.resolve("sources.conf")).map { l =>
@@ -250,24 +252,19 @@ object ProjectLoader {
         url = if (parts.length > 3) unquote(parts(3)) else "")
     }
 
-    // dependencies.conf: `name warehouse_root [database] [schema]` per
-    // line (dbt mesh dependencies.yml + deployment coordinates) — the
-    // upstream projects two-arg ref('name', 'model') calls resolve into
+    // dependencies.conf: `name warehouse_root [database] [schema]
+    // [commit_mode]` per line (dbt mesh dependencies.yml + deployment
+    // coordinates) — the upstream projects two-arg ref('name', 'model')
+    // calls resolve into; the optional 5th token may only say `manifest`
     val dependencies = readLines(root.resolve("dependencies.conf")).map { l =>
       val parts = tokenize(l)
       require(parts.length >= 2,
         s"dependencies.conf: need name warehouse_root, got: $l")
+      graft.core.Warehouse.checkCommitMode(
+        s"dependencies.conf (${parts(0)})", parts.lift(4))
       DependencyDef(parts(0), parts(1),
         if (parts.length > 2) parts(2) else "analytics",
-        if (parts.length > 3) parts(3) else "main",
-        // 5th token: the UPSTREAM deployment's commit mode
-        parts.lift(4) match {
-          case Some("manifest") => graft.core.CommitMode.Manifest
-          case Some("rename") => graft.core.CommitMode.Rename
-          case Some(other) => throw new IllegalArgumentException(
-            s"dependencies.conf: commit mode must be manifest|rename, got '$other'")
-          case None => graft.core.CommitMode.Auto
-        })
+        if (parts.length > 3) parts(3) else "main")
     }
 
     // metrics.conf: `name model calculation expr time_dim [dim1,dim2]

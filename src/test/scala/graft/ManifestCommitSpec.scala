@@ -7,13 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.materialize._
 
-/** The object-store commit protocol (CommitMode.Manifest): versioned data
-  * dirs + numbered manifest files, commit = atomic create-if-absent of the
-  * next manifest. Mirrors MaterializeSpec's crash-window battery for the
-  * strategy where the crash windows are DIFFERENT: there are no renames,
-  * so the failure modes are orphan version dirs (write finished, commit
-  * never happened) and truncated manifests (commit half-written) — both
-  * must be invisible to readers and reclaimed by GC.
+/** The warehouse commit protocol: versioned data dirs + numbered
+  * manifest files, commit = atomic create-if-absent of the next manifest.
+  * There are no renames, so the crash windows are orphan version dirs
+  * (write finished, commit never happened) and truncated manifests
+  * (commit half-written) — both must be invisible to readers and
+  * reclaimed by GC.
   */
 class ManifestCommitSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,8 +23,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     .getOrCreate()
 
   def freshWh(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_mf_wh").toString,
-      CommitMode.Manifest)
+    new Warehouse(spark, Files.createTempDirectory("graft_mf_wh").toString)
   def rel(n: String): Relation = Relation("db", "sch", n)
 
   def df(rows: Seq[(Long, String, Double)]) = {
@@ -189,15 +187,16 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(out.filter(col("id") === 1L).select("extra").collect().head.isNullAt(0))
   }
 
-  test("legacy rename-layout relation is readable by a manifest warehouse") {
-    val tmp = Files.createTempDirectory("graft_mf_legacy").toString
-    val renameWh = new Warehouse(spark, tmp, CommitMode.Rename)
-    val r = rel("t_leg")
-    renameWh.writeAtomic(df(Seq((1L, "a", 1.0))), r)
-    val mfWh = new Warehouse(spark, tmp, CommitMode.Manifest)
-    assert(mfWh.exists(r))
-    assert(mfWh.read(r).count() == 1)
-    assert(mfWh.footerRows(r) == 1L)
+  test("a relation dir without a committed manifest is absent, and read says so") {
+    val wh = freshWh(); val r = rel("t_flat")
+    // bare parquet files at the relation root: not a committed relation
+    spark.range(3).write.parquet(wh.path(r))
+    assert(!wh.exists(r))
+    assert(wh.footerRows(r) == 0L)
+    val e = intercept[IllegalArgumentException](wh.read(r))
+    assert(e.getMessage.contains("no committed manifest"), e.getMessage)
+    wh.writeAtomic(df(Seq((1L, "a", 1.0))), r)
+    assert(wh.exists(r) && wh.read(r).count() == 1 && wh.footerRows(r) == 1L)
   }
 
   test("manifest read is ONE scan relation, however many version dirs") {
@@ -312,7 +311,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     try {
       // fresh Warehouse: wh's per-seq read cache would otherwise serve
       // the serially-constructed DataFrame and skip the parallel path
-      val wh2 = new Warehouse(spark, wh.root, CommitMode.Manifest)
+      val wh2 = new Warehouse(spark, wh.root)
       val parallel = wh2.read(r).collect()
         .map(x => (x.getAs[Long]("id"), x.getAs[String]("name"))).toSet
       assert(parallel == serial, "parallel listing changed the data")
@@ -420,13 +419,6 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(wh.streamWatermark(r, "other").contains(0L))
     assert(wh.streamWatermark(r, "src").contains(1L))
     assert(wh.read(r).count() == 5)
-
-    // rename mode has no atomic data+marker commit: refuse loudly
-    val rn = new Warehouse(spark,
-      Files.createTempDirectory("graft_rn_wh").toString, CommitMode.Rename)
-    intercept[IllegalArgumentException] {
-      rn.appendStreamBatch(b0, rel("t_rn"), "src", 0L)
-    }
   }
 
   test("incremental consumer: delta-only reads, exactly-once checkpoint, loud lag failure") {
@@ -468,13 +460,6 @@ class ManifestCommitSpec extends AnyFunSuite {
     // LOUDLY (silently skipping unretained deltas would drop rows)
     (1 to 4).foreach(k => wh.append(df(Seq((100L + k, "x", 1.0))), src))
     intercept[IllegalArgumentException] { step() }
-
-    // rename mode has no atomic data+checkpoint commit: refuse
-    val rn = new Warehouse(spark,
-      Files.createTempDirectory("graft_rn_wh2").toString, CommitMode.Rename)
-    intercept[IllegalArgumentException] {
-      rn.processIncrement(rel("a"), rel("b"), "c")(identity)
-    }
   }
 
   test("compactTable: one entry, same rows, metadata carried, partitioned refused") {
@@ -619,32 +604,25 @@ class ManifestCommitSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unrecoverable"), e.getMessage)
   }
 
-  test("explicit-but-invalid commit mode fails fast; pbackup never lists") {
-    val prev = sys.props.get("graft.commit.mode")
-    sys.props("graft.commit.mode") = "manifests" // typo
-    try {
-      val e = intercept[IllegalArgumentException] {
-        new Warehouse(spark,
-          Files.createTempDirectory("graft_badmode").toString,
-          CommitMode.Auto).usesManifest
-      }
-      assert(e.getMessage.contains("manifests"), e.getMessage)
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.commit.mode") = v
-        case None => sys.props.remove("graft.commit.mode")
-      }
+  test("invalid commit-mode settings fail fast; uncommitted dirs never list") {
+    Warehouse.checkCommitMode("setting", None)
+    Warehouse.checkCommitMode("setting", Some("manifest"))
+    Seq("rename", "manifests").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        Warehouse.checkCommitMode("setting", Some(bad)))
+      assert(e.getMessage.contains(bad) &&
+        e.getMessage.contains("rename commit protocol was removed"),
+        e.getMessage)
     }
-    // a crashed rename-mode merge leaves <model>__dbt_pbackup on disk: it
-    // must never surface as a relation (a pattern-driven cleanup would
-    // drop the only surviving copy of the crashed partition)
+    // a writer that crashed before its first commit leaves a relation dir
+    // holding only an uncommitted version dir: it must never surface as a
+    // relation (a pattern-driven cleanup or catalog would see a table
+    // that has no data)
     val wh = freshWh()
-    val r = rel("real_model")
-    wh.writeAtomic(df(Seq((1L, "a", 1.0))), r)
-    Files.createDirectories(
-      Paths.get(wh.path(rel("real_model__dbt_pbackup"))))
+    wh.writeAtomic(df(Seq((1L, "a", 1.0))), rel("real_model"))
+    Files.createDirectories(Paths.get(wh.path(rel("crashed_model")),
+      "_graft", "v000000000001-deadbeef"))
     val names = wh.listRelations("db", "sch").map(_.identifier)
-    assert(names.contains("real_model"), names.toString)
-    assert(!names.exists(_.endsWith("__dbt_pbackup")), names.toString)
+    assert(names == Seq("real_model"), names.toString)
   }
 }

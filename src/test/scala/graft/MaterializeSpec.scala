@@ -31,8 +31,6 @@ class MaterializeSpec extends AnyFunSuite {
     m.table(df(Seq((1L, "a", 1.0), (2L, "b", 2.0))), r)
     m.table(df(Seq((3L, "c", 3.0))), r)
     assert(wh.read(r).collect().map(_.getLong(0)).toSet == Set(3L))
-    assert(!wh.exists(r.suffixed("__dbt_tmp")))
-    assert(!wh.exists(r.suffixed("__dbt_backup")))
     assert(wh.listRelations("db", "sch").map(_.identifier) == Seq("t1"))
   }
 
@@ -369,12 +367,26 @@ class MaterializeSpec extends AnyFunSuite {
   }
 
   /** (path, length, mtime) of every data file under one partition dir. */
+  /** Files backing leaf partition `dir`: its dir in every version dir
+    * the current manifest maps the leaf to. */
   def partFiles(wh: Warehouse, r: Relation, dir: String): Set[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(wh.path(r), dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).filter(_.isFile)
+    import org.apache.hadoop.fs.Path
+    val mf = new Path(wh.path(r), "_graft")
+    val fs = mf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    wh.manifestEntries(r).getOrElse(Nil).collect {
+      case (v, part) if part == dir || part.isEmpty => new Path(new Path(mf, v), dir)
+    }.filter(fs.exists).flatMap(p => fs.listStatus(p).filter(_.isFile))
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
+  }
+
+  /** Run `op` with a crash injected at the first firing of `point`. */
+  def crashAt(point: String)(op: => Unit): Unit = {
+    Warehouse.faultHandler = n =>
+      if (n == point) throw new IllegalStateException(s"crash at $point")
+    try {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage == s"crash at $point", e.getMessage)
+    } finally Warehouse.faultHandler = Warehouse.NoFault
   }
 
   test("partitioned merge rewrites only the increment's partitions") {
@@ -394,8 +406,6 @@ class MaterializeSpec extends AnyFunSuite {
     // untouched partitions keep their exact files: no full-table rewrite
     assert(partFiles(wh, r, "name=p1") == p1Files)
     assert(partFiles(wh, r, "name=p3") == p3Files)
-    assert(!wh.exists(r.suffixed("__dbt_tmp")))
-    assert(!wh.exists(r.suffixed("__dbt_pbackup")))
   }
 
   test("partitioned merge_update_columns rewrites only touched partitions") {
@@ -432,8 +442,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(out == Map(1L -> 1.0, 2L -> 22.0, 3L -> 3.0, 20L -> 20.0))
     assert(partFiles(wh, r, "d=d1/h=0") == keepA)
     assert(partFiles(wh, r, "d=d2/h=0") == keepB)
-    assert(!wh.exists(r.suffixed("__dbt_tmp")))
-    assert(!wh.exists(r.suffixed("__dbt_pbackup")))
   }
 
   test("merge detects a key that moved partitions and removes its old row") {
@@ -471,29 +479,22 @@ class MaterializeSpec extends AnyFunSuite {
     assert(ids == Set((1L, "p1"), (1L, "p2"), (2L, "p2")))
   }
 
-  test("replacePartitions restores a partition caught in the crash window") {
+  test("replacePartitions crashed before its commit leaves every partition readable") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("inc13")
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
       incrementalStrategy = IncrementalStrategy.DeleteInsert,
       partitionBy = Seq("name"))
     m.incremental(df(Seq((1L, "p1", 1.0), (2L, "p2", 2.0))), r, cfg)
-    // simulate a crash between the two swap renames: p1 sits in the
-    // partition backup area, its live dir is gone
-    val backup = r.suffixed("__dbt_pbackup")
-    val fs = new org.apache.hadoop.fs.Path(wh.path(r))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(wh.path(backup)))
-    fs.rename(new org.apache.hadoop.fs.Path(wh.path(r), "name=p1"),
-      new org.apache.hadoop.fs.Path(wh.path(backup), "name=p1"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(wh.path(r), "name=p1")))
-    // the next partitioned merge's recovery preamble restores p1 first
-    m.incremental(df(Seq((2L, "p2", 22.0))), r, cfg)
-    val out = wh.read(r).collect()
+    // the merge's new version dir is written, its manifest never lands
+    crashAt("mf.replace.data-written")(
+      m.incremental(df(Seq((1L, "p1", 11.0))), r, cfg))
+    def scores = wh.read(r).collect()
       .map(x => (x.getLong(0), x.getAs[Double]("score"))).toMap
-    assert(out == Map(1L -> 1.0, 2L -> 22.0))
-    assert(!wh.exists(backup))
+    assert(scores == Map(1L -> 1.0, 2L -> 2.0))
+    // the next partitioned merge builds on the committed state
+    m.incremental(df(Seq((2L, "p2", 22.0))), r, cfg)
+    assert(scores == Map(1L -> 1.0, 2L -> 22.0))
   }
-
   test("compaction rewrites only crowded leaves, preserving rows and cold leaves") {
     val wh = freshWh(); val r = rel("t_compact")
     // four appends pile four files into each touched partition
@@ -515,55 +516,35 @@ class MaterializeSpec extends AnyFunSuite {
     assert(wh.compactPartitions(r, Seq("name"), maxFiles = 2).isEmpty)
   }
 
-  test("crash after swap, before backup drop: stale pbackup is discarded, not restored") {
+  test("crash after the commit, before GC: the next merge builds on the new state") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("inc14")
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
       incrementalStrategy = IncrementalStrategy.DeleteInsert,
       partitionBy = Seq("name"))
     m.incremental(df(Seq((1L, "p1", 1.0), (2L, "p2", 2.0))), r, cfg)
-    // simulate the second crash window: p1 was already swapped to NEW data
-    // (live dir present) but the backup of the OLD copy was never dropped
-    val backup = r.suffixed("__dbt_pbackup")
-    val fs = new org.apache.hadoop.fs.Path(wh.path(r))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bdir = new org.apache.hadoop.fs.Path(wh.path(backup), "name=p1")
-    fs.mkdirs(bdir.getParent)
-    // stand-in for the old copy: any files under the backup dir
-    fs.mkdirs(bdir)
-    // next merge must DROP the stale backup (live p1 exists), never
-    // "restore" it over the newer data
+    // the manifest is claimed, then the writer dies before retention GC
+    crashAt("commit.committed")(
+      m.incremental(df(Seq((1L, "p1", 11.0))), r, cfg))
     m.incremental(df(Seq((2L, "p2", 22.0))), r, cfg)
-    assert(!wh.exists(backup))
     val out = wh.read(r).collect()
       .map(x => (x.getAs[Long]("id"), x.getAs[Double]("score"))).toMap
-    assert(out == Map(1L -> 1.0, 2L -> 22.0))
+    assert(out == Map(1L -> 11.0, 2L -> 22.0))
   }
-
-  test("full refresh repairs a crashed partition swap and clears the backup") {
+  test("full refresh after a crashed partitioned merge never resurrects its rows") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("inc15")
     val cfg = ModelConfig(materialized = "incremental", uniqueKey = Seq("id"),
       incrementalStrategy = IncrementalStrategy.DeleteInsert,
       partitionBy = Seq("name"))
     m.incremental(df(Seq((1L, "p1", 1.0), (2L, "p2", 2.0))), r, cfg)
-    // crash window one: p1 moved to pbackup, live dir gone
-    val backup = r.suffixed("__dbt_pbackup")
-    val fs = new org.apache.hadoop.fs.Path(wh.path(r))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(wh.path(backup)))
-    fs.rename(new org.apache.hadoop.fs.Path(wh.path(r), "name=p1"),
-      new org.apache.hadoop.fs.Path(wh.path(backup), "name=p1"))
-    // a FULL REFRESH through writeAtomic (not the partitioned-merge path)
-    // must consume the pbackup: leaving it stale would let a later
-    // partitioned merge "restore" p1 — data the refresh legitimately
-    // dropped — back into the table
+    // the crashed merge leaves an orphan version dir holding p1 rows
+    crashAt("mf.replace.data-written")(
+      m.incremental(df(Seq((5L, "p1", 5.0))), r, cfg))
     m.incremental(df(Seq((3L, "p3", 3.0))), r, cfg, fullRefresh = true)
-    assert(!wh.exists(backup))
     assert(wh.read(r).collect().map(_.getAs[Long]("id")).toSet == Set(3L))
-    // the next partitioned merge must not resurrect the refreshed-away p1
+    // the next partitioned merge must not bring back the orphan's rows
     m.incremental(df(Seq((4L, "p4", 4.0))), r, cfg)
     assert(wh.read(r).collect().map(_.getAs[Long]("id")).toSet == Set(3L, 4L))
   }
-
   test("dropPartitions matches literal '+' and does not confuse it with space") {
     val s = spark
     import s.implicits._
@@ -578,17 +559,14 @@ class MaterializeSpec extends AnyFunSuite {
     assert(wh.read(r).collect().map(_.getLong(0)).toSet == Set(3L))
   }
 
-  test("writeAtomic restores from backup after a crash between the swap renames") {
+  test("writeAtomic crashed before its commit keeps the old table; the retry replaces it") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("t_crash")
     m.table(df(Seq((1L, "a", 1.0))), r)
-    // simulate the crash window: target moved to backup, new data never landed
-    wh.rename(r, r.suffixed("__dbt_backup"))
-    assert(!wh.exists(r))
+    crashAt("commit.claim")(m.table(df(Seq((2L, "b", 2.0))), r))
+    assert(wh.read(r).collect().map(_.getLong(0)).toSeq == Seq(1L))
     m.table(df(Seq((2L, "b", 2.0))), r)
     assert(wh.read(r).collect().map(_.getLong(0)).toSeq == Seq(2L))
-    assert(!wh.exists(r.suffixed("__dbt_backup")))
   }
-
   test("freshness floors hours_late for a fresh-ahead source") {
     val s = spark
     import s.implicits._
@@ -645,7 +623,9 @@ class MaterializeSpec extends AnyFunSuite {
     // scrambled input: (i*37) % 101 is a permutation of 0..100
     val rows = (0L until 101L).map(i => ((i * 37L) % 101L, s"n$i", i.toDouble))
     wh.writeAtomic(df(rows).repartition(4), r, clusterCols = Seq("id"))
-    val files = new java.io.File(wh.path(r)).listFiles()
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val files = walk(new java.io.File(wh.path(r)))
       .filter(_.getName.endsWith(".parquet"))
     assert(files.nonEmpty)
     files.foreach { f =>
@@ -790,15 +770,16 @@ class MaterializeSpec extends AnyFunSuite {
     assert(wh.read(r3).schema("v").dataType.typeName == "long")
   }
 
-  test("expirePartitions: rename mode drops stale leaf dirs by mtime") {
+  test("expirePartitions drops stale leaves by version-dir mtime") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("exp1")
     val s = spark; import s.implicits._
     m.table(Seq((1, "a"), (2, "b")).toDF("v", "pk"), r,
       ModelConfig(partitionBy = Seq("pk")))
     val now = System.currentTimeMillis()
     // age one leaf artificially (local FS): pk=a "written" 8 days ago
+    val (vdir, _) = wh.manifestEntries(r).get.find(_._2 == "pk=a").get
     java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(wh.path(r), "pk=a"),
+      java.nio.file.Paths.get(wh.path(r), "_graft", vdir, "pk=a"),
       java.nio.file.attribute.FileTime.fromMillis(now - 8L * 86400000L))
     val dropped = wh.expirePartitions(r, 7L * 86400000L, now)
     assert(dropped == Seq("pk=a"), dropped.toString)
@@ -806,7 +787,6 @@ class MaterializeSpec extends AnyFunSuite {
       .map(_.getString(0)).toSet == Set("b"))
     assert(wh.expirePartitions(r, 7L * 86400000L, now).isEmpty)
   }
-
   test("alterColumnType: multi-column partition layout fully preserved and guarded") {
     val wh = freshWh(); val m = new Materializer(wh); val r = rel("alt3")
     val s = spark; import s.implicits._

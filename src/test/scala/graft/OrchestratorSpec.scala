@@ -299,7 +299,7 @@ class OrchestratorSpec extends AnyFunSuite {
         // described but NOT persist_docs'd: must stay catalog-only
         "ddl_incr" -> "Append-only increments"))
     val e = new Engine(spark, p,
-      Target(root(), commitMode = graft.core.CommitMode.Manifest))
+      Target(root()))
     assert(e.build()._1.forall(_.status == "success"))
     assert(e.build()._1.forall(_.status == "success"))
     val (stmts, skipped) = e.catalogDdl()
@@ -731,7 +731,8 @@ class OrchestratorSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val plan = spark.sql(compiled).queryExecution.executedPlan.toString
+      val plan = spark.sql(e2.resolveSql(compiled)).queryExecution
+        .executedPlan.toString
       assert(plan.contains("PartitionFilters") &&
         """PartitionFilters: \[[^\]]*>= 9""".r.findFirstIn(plan).isDefined,
         s"no partition filter in plan:\n$plan")
@@ -810,6 +811,77 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(nodes.map(_.status).forall(_ == "success"))
     assert(ci.readModel("by_region").count() == 5)
     assert(!ci.warehouse.exists(ci.relationFor("nations")))
+  }
+
+  test("defer: load_relation over a prod relation with only an uncommitted version dir is none") {
+    // prod's `nations` writer crashed before its first commit: the
+    // relation dir holds a version dir with data files but no manifest
+    val prodRoot = root()
+    val ci = new Engine(spark, baseProject.copy(models = Seq(
+      baseProject.models.head,
+      ModelDef("guarded",
+        """{% if load_relation(ref('nations')) is not none %}
+          |SELECT 'present' AS branch FROM {{ ref('nations') }} LIMIT 1
+          |{% else %}
+          |SELECT 'missing' AS branch
+          |{% endif %}""".stripMargin))), Target(root()))
+    val orphan = java.nio.file.Paths.get(
+      ci.relationFor("nations").pathUnder(prodRoot),
+      "_graft", "v000000000001-0badc0de")
+    spark.read.parquet(s"$sf/nation.parquet").write.parquet(orphan.toString)
+    val (nodes, _) = ci.build(select = Some(Set("guarded")),
+      deferRoot = Some(prodRoot))
+    assert(nodes.map(_.status) == Seq("success"), nodes.toString)
+    assert(ci.readModel("guarded").collect().map(_.getString(0)).toSeq ==
+      Seq("missing"))
+  }
+
+  test("defer: introspection over a deferred ref reads prod's committed relation") {
+    val prodRoot = root()
+    assert(new Engine(spark, baseProject, Target(prodRoot)).build()._1
+      .forall(_.status == "success"))
+    val ci = new Engine(spark, baseProject.copy(models = Seq(
+      baseProject.models.head,
+      ModelDef("star_copy",
+        "SELECT {{ dbt_utils.star(ref('nations'), except=['n_name']) }} " +
+          "FROM {{ ref('nations') }}"))), Target(root()))
+    val (nodes, _) = ci.build(select = Some(Set("star_copy")),
+      deferRoot = Some(prodRoot))
+    assert(nodes.map(_.status) == Seq("success"), nodes.toString)
+    val out = ci.readModel("star_copy")
+    assert(out.columns.toSeq == Seq("n_nationkey", "n_regionkey"))
+    assert(out.count() == 25)
+  }
+
+  test("defer: one relation name under the PR and prod roots never aliases") {
+    val prodRoot = root(); val ciRoot = root()
+    assert(new Engine(spark, baseProject, Target(prodRoot)).build()._1
+      .forall(_.status == "success"))
+    val ci = new Engine(spark, baseProject, Target(ciRoot))
+    // by_region defers its `nations` ref to prod, registering prod's root
+    assert(ci.build(select = Some(Set("by_region")),
+      deferRoot = Some(prodRoot))._1.forall(_.status == "success"))
+    // the PR then builds a narrower `nations` of its own
+    val narrow = baseProject.copy(models = Seq(ModelDef("nations",
+      "SELECT n_nationkey, n_name, n_regionkey " +
+        "FROM {{ source('tpch','nation') }} WHERE n_regionkey = 0")))
+    assert(new Engine(spark, narrow, Target(ciRoot)).build()._1
+      .forall(_.status == "success"))
+    // one query naming both: each path must resolve to its own root
+    val rel = ci.relationFor("nations")
+    val both = ci.resolveSql(
+      s"SELECT count(*) FROM (SELECT * FROM parquet.`${rel.pathUnder(ciRoot)}` " +
+        s"UNION ALL SELECT * FROM parquet.`${rel.pathUnder(prodRoot)}`)")
+    assert(spark.sql(both).head().getLong(0) == 5L + 25L)
+  }
+
+  test("a Target naming the removed rename protocol fails loudly") {
+    @scala.annotation.nowarn("cat=deprecation")
+    def renameTarget = Target(root(), commitMode = graft.core.CommitMode.Rename)
+    val e = intercept[IllegalArgumentException](
+      new Engine(spark, baseProject, renameTarget))
+    assert(e.getMessage.contains("rename commit protocol was removed"),
+      e.getMessage)
   }
 
   test("per-PR schema namespacing via env-templated schema") {
@@ -1234,7 +1306,7 @@ class OrchestratorSpec extends AnyFunSuite {
 
   test("vacuum enforces bigquery TTLs; metadata survives; properties exported") {
     val dir = root()
-    val tgt = Target(dir, commitMode = CommitMode.Manifest)
+    val tgt = Target(dir)
     val p = baseProject.copy(models = Seq(
       ModelDef("nations_part",
         """{{ config(materialized='table', partition_by='n_regionkey',
@@ -1417,10 +1489,9 @@ class OrchestratorSpec extends AnyFunSuite {
     // project into the same root concurrently, on the manifest commit
     // protocol: the per-relation writer lock serializes each
     // materialization, and manifest readers see old-or-new but never an
-    // absent table (the rename protocol's swap window would make a reader
-    // mid-swap fail — that window is exactly what Manifest removes)
+    // absent table
     val r = root()
-    val tgt = Target(r, commitMode = CommitMode.Manifest)
+    val tgt = Target(r)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (1 to 2).map { _ =>
       new Thread(() => {
@@ -1439,7 +1510,7 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(e.readModel("by_region").count() == 5)
     // no leftover tmp/backup relations or lock files
     val rel0 = e.relationFor("nations")
-    val whRead = new Warehouse(spark, r, CommitMode.Manifest)
+    val whRead = new Warehouse(spark, r)
     assert(whRead.listRelations(rel0.database, rel0.schema).map(_.identifier)
       .forall(n => !n.contains("__dbt_")))
     assert(!java.nio.file.Files.exists(
@@ -1465,8 +1536,7 @@ class OrchestratorSpec extends AnyFunSuite {
         ModelDef("mv_reader",
           """SELECT o_orderstatus, round(mean_cents, 2) AS m2, n
             |FROM {{ ref('orders_avg_mv') }}""".stripMargin)))
-    val e = new Engine(spark, p, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e = new Engine(spark, p, Target(root()))
     val (nodes, _) = e.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.map(n => s"${n.name}:${n.status}:${n.error}").mkString(","))
@@ -1516,8 +1586,7 @@ class OrchestratorSpec extends AnyFunSuite {
           """{{ config(materialized='materialized_view') }}
             |SELECT o_orderstatus, count(*) AS n
             |FROM {{ ref('orders_v') }} GROUP BY o_orderstatus""".stripMargin)))
-    val e = new Engine(spark, p, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e = new Engine(spark, p, Target(root()))
     val (nodes, _) = e.build()
     val mv = nodes.find(_.name == "orders_mv").get
     assert(mv.status == "error",
@@ -1548,8 +1617,7 @@ class OrchestratorSpec extends AnyFunSuite {
             |SELECT o_orderstatus, count(*) AS n, sum(cents) AS total,
             |  max(o_orderkey) AS max_key
             |FROM {{ ref('orders_t') }} GROUP BY o_orderstatus""".stripMargin)))
-    val e = new Engine(spark, p, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e = new Engine(spark, p, Target(root()))
     val (nodes, _) = e.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.map(n => s"${n.name}:${n.status}:${n.error}").mkString(","))
@@ -1600,8 +1668,7 @@ class OrchestratorSpec extends AnyFunSuite {
           |WHERE cents > 0 GROUP BY o_orderstatus""".stripMargin)
       case m => m
     })
-    val e2 = new Engine(spark, bad, Target(root(),
-      commitMode = CommitMode.Manifest))
+    val e2 = new Engine(spark, bad, Target(root()))
     val (nodes3, _) = e2.build()
     assert(nodes3.find(_.name == "orders_mv").exists(_.status == "error"),
       "a WHERE'd materialized_view must error, not half-apply")
@@ -1659,7 +1726,7 @@ class OrchestratorSpec extends AnyFunSuite {
     put("descriptions.conf", "doc_nations '{{ doc(''nations_doc'') }}'\n")
     val (p, _) = ProjectLoader.load(proj.toString)
     val e = new Engine(spark, p,
-      Target(root(), commitMode = graft.core.CommitMode.Manifest, threads = 1))
+      Target(root(), threads = 1))
     assert(e.build()._1.forall(_.status == "success"))
     val (stmts, skipped) = e.catalogDdl()
     assert(skipped.isEmpty, skipped.toString)
@@ -1825,7 +1892,7 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(e2.invocationId != e.invocationId)
   }
 
-  test("cross-project ref: unregistered dependency fails loudly; rename-mode upstream reads by path") {
+  test("cross-project ref: unregistered dependency fails loudly; upstream resolves through its own root") {
     val upRoot = root()
     val up = Project(name = "up",
       sources = Seq(SourceDef("tpch", "nation", s"$sf/nation.parquet")),

@@ -60,8 +60,7 @@ class ProjectLoaderSpec extends AnyFunSuite {
 
     val engine = new Engine(spark, project,
       Target(Files.createTempDirectory("graft_demo").toString,
-        threads = conf("threads").toInt,
-        commitMode = graft.core.CommitMode.Manifest))
+        threads = conf("threads").toInt))
     val (nodes, tests) = engine.build()
     assert(nodes.map(_.status).forall(_ == "success"),
       nodes.filter(_.status != "success").toString)
@@ -186,6 +185,25 @@ class ProjectLoaderSpec extends AnyFunSuite {
     val s = project.sources.head
     assert(s.loadedAtField.contains("o_orderdate"))
     assert(s.filter.contains("o_orderstatus = 'O'"))
+  }
+
+  test("commit_mode settings accept manifest or nothing; rename fails loudly") {
+    val dir = Files.createTempDirectory("graft_cmode")
+    def load(conf: String, deps: String): Unit = {
+      Files.writeString(dir.resolve("project.conf"), conf)
+      Files.writeString(dir.resolve("dependencies.conf"), deps)
+      ProjectLoader.load(dir.toString); ()
+    }
+    load("name=cm\ncommit_mode=manifest\n", "up /wh/up analytics main manifest\n")
+    load("name=cm\n", "up /wh/up\n")
+    Seq(("name=cm\ncommit_mode=rename\n", "up /wh/up\n"),
+        ("name=cm\n", "up /wh/up analytics main rename\n"),
+        ("name=cm\ncommit_mode=auto\n", "up /wh/up\n")).foreach {
+      case (conf, deps) =>
+        val e = intercept[IllegalArgumentException](load(conf, deps))
+        assert(e.getMessage.contains("rename commit protocol was removed"),
+          e.getMessage)
+    }
   }
 
   test("sources.conf format= and options= tokens declare non-parquet sources") {

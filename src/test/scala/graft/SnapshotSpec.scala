@@ -20,6 +20,33 @@ class SnapshotSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Version-dir paths of partition `part` (a leaf or an ancestor of
+    * leaves) that the current manifest maps. */
+  def committedDirs(wh: Warehouse, r: Relation,
+                    part: String): Seq[org.apache.hadoop.fs.Path] = {
+    import org.apache.hadoop.fs.Path
+    val mf = new Path(wh.path(r), "_graft")
+    wh.manifestEntries(r).getOrElse(Nil).collect {
+      case (v, p) if p == part || p.startsWith(part + "/") =>
+        new Path(new Path(mf, v), p)
+      case (v, "") => new Path(new Path(mf, v), part)
+    }.distinct
+  }
+
+  /** Parquet files (path -> (length, mtime)) under `dirs`, recursively. */
+  def parquetFiles(fs: org.apache.hadoop.fs.FileSystem,
+                   dirs: Seq[org.apache.hadoop.fs.Path]): Map[String, (Long, Long)] =
+    dirs.filter(fs.exists).flatMap { dir =>
+      val it = fs.listFiles(dir, true)
+      val out = Seq.newBuilder[(String, (Long, Long))]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.getPath.getName.endsWith(".parquet"))
+          out += st.getPath.toString -> (st.getLen, st.getModificationTime)
+      }
+      out.result()
+    }.toMap
+
   def freshWh(): Warehouse =
     new Warehouse(spark, Files.createTempDirectory("graft_snap_wh").toString)
 
@@ -294,16 +321,9 @@ class SnapshotSpec extends AnyFunSuite {
     val fs = new Path(wh.root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def filesOf(bucket: String): Map[String, (Long, Long)] = {
-      val dir = new Path(wh.path(r), s"${Snapshotter.BUCKET}=$bucket")
-      assert(fs.exists(dir), s"expected partition dir $dir")
-      val it = fs.listFiles(dir, true)
-      val out = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          out += st.getPath.toString -> (st.getLen, st.getModificationTime)
-      }
-      out.result()
+      val dirs = committedDirs(wh, r, s"${Snapshotter.BUCKET}=$bucket")
+      assert(dirs.nonEmpty, s"expected committed partition $bucket")
+      parquetFiles(fs, dirs)
     }
     val before = filesOf("2024-02")
     assert(before.nonEmpty)
@@ -329,17 +349,8 @@ class SnapshotSpec extends AnyFunSuite {
       (i, s"p$i", ts("2024-01-10 00:00:00")))), r, Seq("id"), strat)
     val fs = new Path(wh.root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    def currentLeafFiles(): Map[String, (Long, Long)] = {
-      val dir = new Path(wh.path(r), s"${Snapshotter.BUCKET}=${Snapshotter.CURRENT}")
-      val it = fs.listFiles(dir, true)
-      val out = Map.newBuilder[String, (Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet"))
-          out += st.getPath.toString -> (st.getLen, st.getModificationTime)
-      }
-      out.result()
-    }
+    def currentLeafFiles(): Map[String, (Long, Long)] = parquetFiles(fs,
+      committedDirs(wh, r, s"${Snapshotter.BUCKET}=${Snapshotter.CURRENT}"))
     val before = currentLeafFiles()
     assert(before.keys.map(_.split("/").init.last).toSet.size > 2,
       "16 keys should spread over >2 of the 8 sub-buckets")
@@ -398,7 +409,7 @@ class SnapshotSpec extends AnyFunSuite {
 
   test("as-of-key point lookup plans a fraction of the history files (layout + key sidecars)") {
     val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_snap_pt").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_snap_pt").toString)
     val snap = new Snapshotter(wh, subBuckets = Some(4))
     val r = Relation("db", "s", "snap_pt")
     val strat = SnapshotStrategy.Timestamp("updated_at")
@@ -436,7 +447,7 @@ class SnapshotSpec extends AnyFunSuite {
     // string key pair: ZOrder can't quantize strings — the layout must
     // fall back to the lexicographic cluster sort, not crash the write
     val whS = new Warehouse(spark,
-      Files.createTempDirectory("graft_snap_mk").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_snap_mk").toString)
     val snapS = new Snapshotter(whS)
     val rs = Relation("db", "s", "snap_strkeys")
     def srcS(tag: String, t: String) =
@@ -451,7 +462,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(outS.filter(col("dbt_valid_to").isNull).count() == 2)
     // numeric key pair: the z-order path
     val whN = new Warehouse(spark,
-      Files.createTempDirectory("graft_snap_mkn").toString, CommitMode.Manifest)
+      Files.createTempDirectory("graft_snap_mkn").toString)
     val snapN = new Snapshotter(whN)
     val rn = Relation("db", "s", "snap_numkeys")
     def srcN(tag: String, t: String) =
